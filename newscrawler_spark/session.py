@@ -12,6 +12,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_memory_bytes() -> int:
+    """min(physical RAM, cgroup memory limit) — the RAM this process may use."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw))
+    return total
+
+
 def get_spark(
     app_name: str = "newscrawler_spark",
     cores: int | None = None,
@@ -20,20 +35,25 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) else 32.
+    ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) else the
+    CPUs this process may run on.  The heap defaults to
+    min(3 GB x cores, 48 GB, half the host's RAM) — see the
+    spark.driver.memory note below; ``extra_conf["spark.driver.memory"]``
+    overrides it.
     ``shuffle_partitions`` defaults to 2x cores — small enough to avoid
     tiny-task overhead at sandbox scale, and AQE coalesces further; on a
     real cluster this would be sized to total cores.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(
+            os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+        )
     if shuffle_partitions is None:
         shuffle_partitions = max(8, 2 * cores)
     # resolved once so -Xms below always equals -Xmx, even when the
-    # caller overrides the heap via SPARK_DRIVER_MEM or extra_conf
-    driver_mem = os.environ.get(
-        "SPARK_DRIVER_MEM", f"{min(48, max(16, 3 * cores))}g"
-    )
+    # caller overrides the heap via extra_conf
+    heap_mb = min(3 * 1024 * cores, 48 * 1024, _host_memory_bytes() // 2 // 2**20)
+    driver_mem = f"{heap_mb}m"
     if extra_conf and "spark.driver.memory" in extra_conf:
         driver_mem = extra_conf["spark.driver.memory"]
 
@@ -60,6 +80,10 @@ def get_spark(
         # allocation rate, and first-touch page faults put the host at
         # 63-77% KERNEL time during the extract phase (measured via
         # top); -Xms=-Xmx below pins the heap so pages fault once.
+        # Because the pinned heap is committed at start, it is also
+        # capped at half the host's RAM: the rest is left to the Python
+        # workers and the OS (a 16g heap on a 16 GB host was OOM-killed
+        # at startup).
         .config("spark.driver.memory", driver_mem)
         # Throughput GC for the batch-shaped local JVM: an event-log
         # audit of a 32-thread crawl measured JVM GC at 17% of executor
@@ -73,24 +97,21 @@ def get_spark(
         # threads — a real 8-core executor host gets 8.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_GC",
-                f"-XX:+UseParallelGC -XX:ParallelGCThreads={cores} "
-                # -Xms = -Xmx: never expand the heap at runtime (see the
-                # driver.memory note — expansion page-faults measured as
-                # a 63-77% kernel-time storm at 32 threads)
-                f"-Xms{driver_mem} "
-                # AlwaysPreTouch: fault every heap page in at JVM start
-                # instead of on first allocation.  -Xms alone only
-                # RESERVES the range; first-touch faults still land in
-                # the middle of the 32-thread extract phase.  Measured
-                # A/B on the 400k-seed crawl (identical outputs):
-                # 218.6 s -> 158.8 s wall, steady 8,826 -> 11,901 urls/s.
-                # Alternatives measured WORSE on the same matrix:
-                # -Xmn8g 231 s (young too small at this alloc rate),
-                # G1+pretouch 192 s (pause-target GC taxes throughput).
-                "-XX:+AlwaysPreTouch",
-            ),
+            f"-XX:+UseParallelGC -XX:ParallelGCThreads={cores} "
+            # -Xms = -Xmx: never expand the heap at runtime (see the
+            # driver.memory note — expansion page-faults measured as
+            # a 63-77% kernel-time storm at 32 threads)
+            f"-Xms{driver_mem} "
+            # AlwaysPreTouch: fault every heap page in at JVM start
+            # instead of on first allocation.  -Xms alone only
+            # RESERVES the range; first-touch faults still land in
+            # the middle of the 32-thread extract phase.  Measured
+            # A/B on the 400k-seed crawl (identical outputs):
+            # 218.6 s -> 158.8 s wall, steady 8,826 -> 11,901 urls/s.
+            # Alternatives measured WORSE on the same matrix:
+            # -Xmn8g 231 s (young too small at this alloc rate),
+            # G1+pretouch 192 s (pause-target GC taxes throughput).
+            "-XX:+AlwaysPreTouch",
         )
         .config("spark.ui.enabled", "false")
         # floor on file-scan splits: CPU-heavy expressions fused into a
@@ -115,22 +136,12 @@ def get_spark(
         # the measurements)
         .config("spark.sql.constraintPropagation.enabled", "false")
         # lz4 serialized-RDD blocks: only consulted by _SER storage
-        # levels (the round-checkpoint knob below); shuffle/broadcast
-        # compression are separate confs and already default-on.  Text-
-        # heavy checkpoint rows compress ~5x, trading abundant CPU for
-        # the scarce resource at high thread counts — memory bandwidth
+        # levels; shuffle/broadcast compression are separate confs and
+        # already default-on.  Text-heavy rows compress ~5x, trading
+        # abundant CPU for the scarce resource at high thread counts —
+        # memory bandwidth
         .config("spark.rdd.compress", "true")
     )
-    # benchmarking escape hatch: JSON dict of session confs applied
-    # before caller extras (callers stay authoritative) — lets A/B
-    # harnesses vary e.g. spark.io.compression.codec without plumbing
-    # parameters through every runner
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if env_conf:
-        import json
-
-        for k, v in json.loads(env_conf).items():
-            builder = builder.config(k, str(v))
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

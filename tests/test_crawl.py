@@ -15,7 +15,7 @@ from newscrawler_spark.synth import synth_budgets, synth_frontier, synth_pages, 
 N_SEEDS = 120
 N_PAGES = 800
 MAX_ROUNDS = 4
-CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8, salt_factor=4)
+CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8)
 
 
 @pytest.fixture(scope="module")
@@ -126,10 +126,12 @@ def test_kill_and_resume_bit_identical(spark, world, engine_result, tmp_path_fac
 
 def test_crash_with_uncommitted_deltas_redoes_round(spark, world, engine_result,
                                                     tmp_path_factory):
-    """The deferred-commit pipeline's crash window: round N's deltas are
-    on disk but the manifest never committed N (the docs-write future
-    joins before commit, so a crash can leave exactly this state).
-    Resume must REDO round N over the stale uncommitted files —
+    """A crash after round N's deltas are written but before the
+    manifest commits N (with the deferred docs write, that window spans
+    the next round's plan compile).  The state is made by rolling a
+    committed round 1 back out of the manifest, so all of round 1's
+    deltas — and the frontier delta it wrote for round 2 — stay on disk
+    uncommitted.  Resume must REDO round 1 over those stale files —
     overwrite-idempotent — and every output must stay bit-identical."""
     import json
 
@@ -162,6 +164,49 @@ def test_crash_with_uncommitted_deltas_redoes_round(spark, world, engine_result,
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
+def test_failed_docs_write_never_commits_round(spark, world, engine_result,
+                                               tmp_path_factory):
+    """The background docs write's error path: round 1's docs write
+    raises on its writer thread, the scheduler re-raises it when it
+    joins the write, and the manifest never commits round 1.  An
+    unpatched resume then redoes round 1 and matches the uninterrupted
+    run."""
+    seeds, pages, budgets, robots = world
+    cat2 = Catalog(tmp_path_factory.mktemp("crawl_docs_fail"))
+    seed_frontier(cat2, seeds)
+    write_delta = cat2.write_delta
+    failed = []
+
+    def failing_write_delta(df, table, round_no):
+        if table == "docs" and round_no == 1 and not failed:
+            failed.append(round_no)
+            raise RuntimeError("injected docs write failure")
+        return write_delta(df, table, round_no)
+
+    cat2.write_delta = failing_write_delta
+    with pytest.raises(RuntimeError, match="injected docs write failure"):
+        crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
+              max_rounds=MAX_ROUNDS, conf=CONF)
+    assert failed == [1]
+    assert cat2.last_round == 0
+
+    del cat2.write_delta
+    crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
+          max_rounds=MAX_ROUNDS, conf=CONF)
+
+    for table, key in [
+        ("fetch_order", ["round", "domain", "rank", "canonical_url", "url"]),
+        ("url_seen", ["canonical_url", "round_seen"]),
+        ("quarantine", ["url", "round", "error", "attempt"]),
+    ]:
+        a = engine_result.read_table(spark, table).select(*key)
+        b = cat2.read_table(spark, table).select(*key)
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
+    a = engine_result.read_table(spark, "docs")
+    b = cat2.read_table(spark, "docs")
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
 def test_crawl_with_cuckoo_filter_identical(spark, world, engine_result,
                                             tmp_path_factory):
     """Swapping the bloom sidecar for the cuckoo filter
@@ -172,7 +217,7 @@ def test_crawl_with_cuckoo_filter_identical(spark, world, engine_result,
     cat2 = Catalog(tmp_path_factory.mktemp("crawl_cuckoo"))
     seed_frontier(cat2, seeds)
     conf = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
-                       salt_factor=4, seen_filter="cuckoo",
+                       seen_filter="cuckoo",
                        cuckoo_capacity=2048)
     crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
           max_rounds=MAX_ROUNDS, conf=conf)
@@ -211,7 +256,7 @@ def test_per_round_incremental_dedup(spark, world, tmp_path_factory):
     cat = Catalog(tmp_path_factory.mktemp("crawl_dedup"))
     seed_frontier(cat, seeds)
     conf = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
-                       salt_factor=4, dedup_docs=True, dedup_min_common=3)
+                       dedup_docs=True, dedup_min_common=3)
     totals = crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
                    max_rounds=MAX_ROUNDS, conf=conf)
     assert any("neardup_matches" in c for c in totals.values())

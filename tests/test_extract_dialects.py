@@ -2,6 +2,10 @@
 hand-built fixtures whose expected spans are derived from the reference
 parsers' semantics (cited in each dialect's docstring)."""
 
+from pathlib import Path
+
+import pytest
+
 from newscrawler_spark.functions import platforms as P
 from newscrawler_spark.functions.extract import extract_one
 from newscrawler_spark.functions.wechat import parse_wechat
@@ -231,6 +235,8 @@ def test_quora_double_encoded_json():
     assert out["spans"] == [("text", "Answer body here.", "")]
 
 
+@pytest.mark.skipif(not Path("/root/reference").is_dir(),
+                    reason="reference snapshot /root/reference absent")
 def test_quora_reference_golden_fixture():
     """The reference's only committed fixture (an 85 KB live-captured
     page, /root/reference/news_crawler/quora/test/response.html with the

@@ -65,19 +65,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from newscrawler_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .appName("compare-oracle")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("compare-oracle")
 
     con = duckdb.connect()
     for t in TABLES:
